@@ -8,6 +8,18 @@ layer) and no sequences (deterministic row_number surrogate keys, SURVEY.md §1.
 Physical design: fact_payroll is written partitioned by `month` — the Spark analog
 of the reference's fact_payroll(month) B-tree index (/root/reference/src/models.py:41-45):
 month-equality queries prune to a single partition directory instead of scanning.
+
+Read handles: `PayrollWarehouse.read` keeps one opened DataFrame per table and
+returns it again while the table directory is unchanged, so a service request
+does not re-list the directory and re-infer the schema (one Spark job per
+table). The handle is dropped, and the next `read` opens a fresh one, when the
+directory's `(st_ino, st_mtime_ns)` changes or when `_write` swaps the table
+in this process. Every write must go through `_write`'s rename-swap, which
+puts a new directory in place; that also covers a writer in another process
+or another warehouse on the same root. Files added, removed or edited in place
+under a table directory are not seen by an already-opened handle. A query that
+is still running when its table is swapped fails as it always has: its files
+are deleted under it.
 """
 
 from __future__ import annotations
@@ -30,6 +42,8 @@ class PayrollWarehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # table -> (directory key, opened DataFrame); see the module docstring
+        self._handles: dict[str, tuple[tuple[int, int], DataFrame]] = {}
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -38,7 +52,20 @@ class PayrollWarehouse:
         return os.path.exists(self.path(table))
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        path = self.path(table)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)  # raises Spark's PATH_NOT_FOUND
+        # stat BEFORE opening: a swap in between leaves a stale key, which
+        # only costs one extra open on the next read, never a stale handle
+        key = (st.st_ino, st.st_mtime_ns)
+        cached = self._handles.get(table)
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        df = self.spark.read.parquet(path)
+        self._handles[table] = (key, df)
+        return df
 
     def _write(
         self,
@@ -73,6 +100,7 @@ class PayrollWarehouse:
         if os.path.exists(target):
             os.rename(target, old)
         os.rename(tmp, target)
+        self._handles.pop(table, None)
         if os.path.exists(old):
             shutil.rmtree(old)
 
@@ -115,53 +143,56 @@ class PayrollWarehouse:
                 F.row_number().over(Window.partitionBy().orderBy("dept_name")).cast("int"),
             ).select("dept_id", "dept_name")
         dim_dept = dim_dept.cache()
-        self._write(dim_dept, "dim_dept")
+        try:
+            self._write(dim_dept, "dim_dept")
 
-        # 2) dim_employee — FK-resolve dept via broadcast join (reference joins
-        #    stage→dim_dept on dept_name, /root/reference/src/etl.py:41), then
-        #    type-1 upsert on emp_id.
-        dim_dept_fresh = self.read("dim_dept")
-        employees = (
-            csv_ingest.employee_rows(normalized)
-            .join(F.broadcast(dim_dept_fresh), F.col("dept") == F.col("dept_name"), "inner")
-            .select("emp_id", "dept_id", "job_grade", "location")
-        )
-        if self.exists("dim_employee"):
-            dim_emp = upsert(self.read("dim_employee"), employees, ["emp_id"])
-        else:
-            dim_emp = employees
-        self._write(dim_emp, "dim_employee")
-
-        # 3) fact — composite-key upsert on (emp_id, month). Only the months in
-        #    the incoming batch are re-merged (partition pruning on read).
-        facts = csv_ingest.fact_rows(normalized)
-        if self.exists("fact_payroll"):
-            months = [r[0] for r in facts.select("month").distinct().collect()]
-            existing_fact = self.read("fact_payroll")
-            touched = existing_fact.filter(F.col("month").isin(months))
-            merged_fact = upsert(touched, facts, ["emp_id", "month"])
-            fact_out = existing_fact.filter(~F.col("month").isin(months)).unionByName(
-                merged_fact
+            # 2) dim_employee — FK-resolve dept via broadcast join (reference joins
+            #    stage→dim_dept on dept_name, /root/reference/src/etl.py:41), then
+            #    type-1 upsert on emp_id.
+            dim_dept_fresh = self.read("dim_dept")
+            employees = (
+                csv_ingest.employee_rows(normalized)
+                .join(F.broadcast(dim_dept_fresh), F.col("dept") == F.col("dept_name"), "inner")
+                .select("emp_id", "dept_id", "job_grade", "location")
             )
-        else:
-            fact_out = facts
-        # align column order: partition column last is not required; keep schema
-        # the partition column LEADS the sort: the dynamic-partition writer
-        # requires month ordering and would otherwise insert its own sort,
-        # silently discarding the emp_id clustering
-        self._write(
-            fact_out,
-            "fact_payroll",
-            partition_by=["month"],
-            sort_within=["month", "emp_id"],
-        )
+            if self.exists("dim_employee"):
+                dim_emp = upsert(self.read("dim_employee"), employees, ["emp_id"])
+            else:
+                dim_emp = employees
+            self._write(dim_emp, "dim_employee")
 
-        counts = {
-            "dim_dept": self.read("dim_dept").count(),
-            "dim_employee": self.read("dim_employee").count(),
-            "fact_payroll": self.read("fact_payroll").count(),
-        }
-        dim_dept.unpersist()
+            # 3) fact — composite-key upsert on (emp_id, month). Only the months in
+            #    the incoming batch are re-merged (partition pruning on read).
+            facts = csv_ingest.fact_rows(normalized)
+            if self.exists("fact_payroll"):
+                months = [r[0] for r in facts.select("month").distinct().collect()]
+                existing_fact = self.read("fact_payroll")
+                touched = existing_fact.filter(F.col("month").isin(months))
+                merged_fact = upsert(touched, facts, ["emp_id", "month"])
+                fact_out = existing_fact.filter(~F.col("month").isin(months)).unionByName(
+                    merged_fact
+                )
+            else:
+                fact_out = facts
+            # align column order: partition column last is not required; keep schema
+            # the partition column LEADS the sort: the dynamic-partition writer
+            # requires month ordering and would otherwise insert its own sort,
+            # silently discarding the emp_id clustering
+            self._write(
+                fact_out,
+                "fact_payroll",
+                partition_by=["month"],
+                sort_within=["month", "emp_id"],
+            )
+
+            counts = {
+                "dim_dept": self.read("dim_dept").count(),
+                "dim_employee": self.read("dim_employee").count(),
+                "fact_payroll": self.read("fact_payroll").count(),
+            }
+        finally:
+            # released even when a later step raises, not only on success
+            dim_dept.unpersist()
         return counts
 
 

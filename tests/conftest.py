@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import importlib.util
 import os
 
 import pytest
@@ -12,6 +13,8 @@ from payroll_etl_fastapi_spark.session import get_spark  # noqa: E402
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 REFERENCE_CSV = "/root/reference/data/payroll.csv"
+PAYROLL_GEN = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "gen.py")
+GENERATED_SEED = 7
 
 
 @pytest.fixture(scope="session")
@@ -25,6 +28,20 @@ def reference_csv() -> str:
     if not os.path.exists(REFERENCE_CSV):
         pytest.skip("reference dataset not available")
     return REFERENCE_CSV
+
+
+@pytest.fixture(scope="session")
+def generated_csv(tmp_path_factory) -> str:
+    """The benchmark generator's seeded scale-1 payroll CSV (the reference's
+    shape: 6 depts, 500 employees, months 2024-09..2025-08), so the KPI path
+    is checked where the reference file is absent. Not for golden anchors:
+    those stay tied to the reference file."""
+    spec = importlib.util.spec_from_file_location("payroll_gen", PAYROLL_GEN)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    path = str(tmp_path_factory.mktemp("generated") / "payroll.csv")
+    gen.write_lines(path, gen.PayrollGen(GENERATED_SEED, scale=1).base_lines())
+    return path
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,7 @@
-"""Service-layer tests against the reference CSV: golden anchors from
-BASELINE.md plus the 404 and shape semantics of /root/reference/src/api.py."""
+"""Service-layer tests: golden anchors from BASELINE.md against the reference
+CSV, plus the 404 and shape semantics of /root/reference/src/api.py and the
+HTTP round trip against the seeded generated CSV, so those run in every
+environment."""
 
 from __future__ import annotations
 
@@ -16,8 +18,15 @@ def service(spark, reference_csv, tmp_path_factory):
     return PayrollService(wh)
 
 
-def test_health(service):
-    assert service.health() == {"status": "ok"}
+@pytest.fixture(scope="module")
+def gen_service(spark, generated_csv, tmp_path_factory):
+    wh = PayrollWarehouse(spark, str(tmp_path_factory.mktemp("wh")))
+    wh.load_csv(generated_csv)
+    return PayrollService(wh)
+
+
+def test_health(gen_service):
+    assert gen_service.health() == {"status": "ok"}
 
 
 def test_summary_golden(service):
@@ -30,18 +39,18 @@ def test_summary_golden(service):
     assert s["tax_share"] == pytest.approx(139358.22 / 605727.98, rel=1e-9)
 
 
-def test_summary_missing_month_404(service):
+def test_summary_missing_month_404(gen_service):
     with pytest.raises(NotFound):
-        service.summary("1999-01")
+        gen_service.summary("1999-01")
 
 
-def test_by_dept_shape(service):
-    rows = service.by_dept("2025-05")
+def test_by_dept_shape(gen_service):
+    rows = gen_service.by_dept("2025-05")
     # `dept`, not dept_name — the reference JSON aliases it (api.py:49 AS dept)
     assert [r["dept"] for r in rows] == sorted(r["dept"] for r in rows)
     assert {"dept", "fot", "gross", "net", "fte", "headcount"} <= set(rows[0])
     with pytest.raises(NotFound):
-        service.by_dept("1999-01")
+        gen_service.by_dept("1999-01")
 
 
 def test_delta_golden(service):
@@ -64,10 +73,10 @@ def test_anomalies_golden(service):
     assert r["z"] == pytest.approx(3.5997360139860146)
 
 
-def test_anomalies_dept_filter_and_missing_month(service):
-    rows = service.anomalies("2025-05", threshold=0.0, limit=5, dept="IT")
+def test_anomalies_dept_filter_and_missing_month(gen_service):
+    rows = gen_service.anomalies("2025-05", threshold=0.0, limit=5, dept="IT")
     assert rows and all(r["dept"] == "IT" for r in rows)
-    assert service.anomalies("1999-01") == []  # reference returns [] (no 404)
+    assert gen_service.anomalies("1999-01") == []  # reference returns [] (no 404)
 
 
 def test_fastapi_wiring_import_gated(service):
@@ -124,9 +133,10 @@ def test_fastapi_wiring_with_stub(service, monkeypatch):
     assert exc.value.status_code == 404
 
 
-def test_stdlib_http_server_round_trip(service):
+def test_stdlib_http_server_round_trip(gen_service):
     """Full HTTP round-trip through the stdlib shell: real sockets, real
-    status codes — the endpoint layer exercised without fastapi installed."""
+    status codes — the endpoint layer exercised without fastapi installed.
+    Each 200 body must equal the service method's own answer."""
     import json
     import threading
     import urllib.error
@@ -134,7 +144,7 @@ def test_stdlib_http_server_round_trip(service):
 
     from payroll_etl_fastapi_spark.api import serve_http
 
-    srv = serve_http(service)
+    srv = serve_http(gen_service)
     port = srv.server_address[1]
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -145,16 +155,16 @@ def test_stdlib_http_server_round_trip(service):
 
         assert get("/health") == (200, {"status": "ok"})
 
-        status, s = get("/kpi/summary?month=2025-05")
-        assert status == 200
-        assert round(s["fot"], 2) == 696994.07 and s["headcount"] == 440
-
-        status, rows = get("/kpi/anomalies?month=2025-05&threshold=3.5&limit=10")
-        assert status == 200
-        assert [r["emp_id"] for r in rows] == ["E100404"]
-
-        status, d = get("/kpi/delta?m1=2025-04&m2=2025-05")
-        assert status == 200 and round(d["company"]["gross_delta"], 2) == -12606.72
+        assert get("/kpi/summary?month=2025-05") == (200, gen_service.summary("2025-05"))
+        assert get("/kpi/by-dept?month=2025-05") == (200, gen_service.by_dept("2025-05"))
+        assert get("/kpi/anomalies?month=2025-05&threshold=3.5&limit=10") == (
+            200,
+            gen_service.anomalies("2025-05", threshold=3.5, limit=10),
+        )
+        assert get("/kpi/delta?m1=2025-04&m2=2025-05") == (
+            200,
+            gen_service.delta("2025-04", "2025-05"),
+        )
 
         with pytest.raises(urllib.error.HTTPError) as e:
             get("/kpi/summary?month=1999-01")

@@ -1,6 +1,7 @@
-"""Edge-month KPI cross-checks: DuckDB replays the reference SQL over the
-reference CSV and the Spark engine must agree — covering first/last months
-and a year boundary, where no screenshot goldens exist (SURVEY.md §5.3.2)."""
+"""Edge-month KPI cross-checks: DuckDB replays the reference SQL over a
+payroll CSV and the Spark engine must agree — covering first/last months
+and a year boundary, where no screenshot goldens exist (SURVEY.md §5.3.2).
+The CSV is the seeded generated one, so these run in every environment."""
 
 from __future__ import annotations
 
@@ -14,14 +15,14 @@ MONTHS = ["2024-09", "2025-08", "2025-01"]  # first, last, year boundary
 
 
 @pytest.fixture(scope="module")
-def service(spark, reference_csv, tmp_path_factory):
+def service(spark, generated_csv, tmp_path_factory):
     wh = PayrollWarehouse(spark, str(tmp_path_factory.mktemp("wh")))
-    wh.load_csv(reference_csv)
+    wh.load_csv(generated_csv)
     return PayrollService(wh)
 
 
 @pytest.fixture(scope="module")
-def duck(reference_csv):
+def duck(generated_csv):
     con = duckdb.connect()
     con.sql(
         f"""
@@ -34,7 +35,7 @@ def duck(reference_csv):
                COALESCE(TRY_CAST(taxes AS DOUBLE), 0) AS taxes,
                COALESCE(TRY_CAST(net AS DOUBLE), 0) AS net,
                COALESCE(TRY_CAST(fte AS DOUBLE), 0) AS fte
-        FROM read_csv_auto('{reference_csv}', all_varchar=true)
+        FROM read_csv_auto('{generated_csv}', all_varchar=true)
         """
     )
     return con
